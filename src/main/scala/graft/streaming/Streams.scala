@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** Structured-Streaming surface of the engine (SURVEY §2.4 W1–W7).
   *
@@ -743,12 +744,17 @@ object Streams extends org.apache.spark.internal.Logging {
     * per-key order.
     *
     * SCHEMA EVOLUTION: adding nullable columns is supported — layers
-    * keep the schema they were written with, reads merge schemas and
+    * keep the schema they were written with, and each version records
+    * its read schema at commit (`v=<id>/_schema`: the predecessor's
+    * record plus the columns this batch adds, appended in commit
+    * order, [[evolveTableSchema]]), so reads plan from that record and
     * surface the new columns as null on old rows (compaction folds the
     * widened shape forward). Dropping or renaming a key/seq/delete
-    * column fails the stream loudly; changing an existing column's
-    * TYPE fails at read (parquet schema merge refuses) — also loud,
-    * never a silent reinterpretation. With `changelog = true` a batch
+    * column fails the stream loudly; adding a nested struct field
+    * widens its column the same way, but changing an existing column's
+    * TYPE otherwise is refused at commit, before the batch's layer
+    * lands, naming the column and both types — also loud, never a
+    * silent reinterpretation. With `changelog = true` a batch
     * that DROPS any data column the table's history carries also fails
     * loudly: retraction rows would surface null for it while earlier
     * +1 rows carried real values, silently breaking ±op telescoping.
@@ -810,23 +816,35 @@ object Streams extends org.apache.spark.internal.Logging {
       val spark = batch.sparkSession
       unresolveReplayedVersion(spark, targetDir, batchId)
       writeMergeLayout(spark, targetDir, layout)
-      if (!batch.isEmpty) {
-        // the batch's own latest-per-key slice, nothing else read or
-        // rewritten (a replayed batch overwrites only its own
-        // subdirectory — the slice is a pure function of the batch)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-        val reduced = batch.withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") === 1).drop("__rk")
-        reduced.coalesce(filesPerBatch)
-          .write.mode("overwrite").parquet(s"$targetDir/rows/batch=$batchId")
-        if (changelog)
-          deriveChangelog(spark, targetDir, layout, reduced, batchId,
-            changelogKeyPushdown, filesPerBatch, "Streams.mergeSink")
-      }
+      // the batch's own latest-per-key slice, nothing else read or
+      // rewritten (a replayed batch overwrites only its own
+      // subdirectory — the slice is a pure function of the batch)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
+      val reduced = batch.withColumn("__rk", row_number().over(w))
+        .filter(col("__rk") === 1).drop("__rk")
+      // a type change is refused here, before anything lands; the sink
+      // owns its table's ids (external writes refuse a `_query` target),
+      // so no write below this batch can still be in flight
+      val base = tableSchemaBase(spark, targetDir, batchId)
+      val evolved = evolveTableSchema(base, reduced.schema, "Streams.mergeSink")
+      // the write counts its own rows: an emptiness probe would be a
+      // second Spark action scanning the change batch again
+      val layerDir = new org.apache.hadoop.fs.Path(s"$targetDir/rows/batch=$batchId")
+      val landed = org.apache.spark.sql.Observation()
+      reduced.observe(landed, count(lit(1)).as("rows"))
+        .coalesce(filesPerBatch).write.mode("overwrite").parquet(layerDir.toString)
+      val hasRows = landed.get("rows") != 0L
+      if (!hasRows)
+        layerDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(layerDir, true)
+      else if (changelog)
+        deriveChangelog(spark, targetDir, layout, reduced, batchId,
+          changelogKeyPushdown, filesPerBatch, "Streams.mergeSink")
       if (listBatchDirs(spark, targetDir, "rows").nonEmpty ||
           committedCompactions(spark, targetDir, "rows").nonEmpty)
-        commitIndexVersion(spark, targetDir, checkpoint, batchId, retainVersions)
+        commitIndexVersion(spark, targetDir, checkpoint, batchId, retainVersions,
+          schema = Some(if (hasRows) evolved else base))
       maybeAutoCompact(spark, targetDir, "rows", keyCols, compactFiles,
         compactEvery, batchId, mergeResolveFor(layout), evolving = true,
         maxTail = maxTail)
@@ -971,7 +989,11 @@ object Streams extends org.apache.spark.internal.Logging {
     * to a racer refuses at commit time (claims carry the writer's
     * nonce, re-checked before the marker is published): the caller
     * sees "nothing was published — retry", never a success report for
-    * a reclaimed write. Returns the committed version. */
+    * a reclaimed write. The version's read schema (`v=<id>/_schema`) is
+    * recorded at commit; a write that commits while a lower version is
+    * still being written records none, so its reads infer the schema
+    * and the slower write's added columns are never planned away.
+    * Returns the committed version. */
   def mergeTableInsert(spark: org.apache.spark.sql.SparkSession,
                        targetDir: String, rows: DataFrame,
                        delete: Boolean = false,
@@ -1105,22 +1127,24 @@ object Streams extends org.apache.spark.internal.Logging {
           else throw e
       }
     }
-    // match the existing layers' seq/delete types so the merged-schema
-    // read never sees an int/long or boolean/string conflict
-    val existingSchema: Option[org.apache.spark.sql.types.StructType] =
-      if (listBatchDirs(spark, targetDir, "rows").nonEmpty ||
-          committedCompactions(spark, targetDir, "rows").nonEmpty)
-        Some(maintainedBatchRows(spark, targetDir, "rows", Long.MaxValue,
-          evolving = true).schema)
-      else None
-    def typeOf(c: String, dflt: org.apache.spark.sql.types.DataType) =
-      existingSchema.flatMap(_.find(_.name == c).map(_.dataType))
-        .getOrElse(dflt)
+    // release the claimed id and whatever landed under it
+    def release(): Unit = Seq(s"$targetDir/rows/batch=$nextId",
+      s"$targetDir/changelog/batch=$nextId", s"$targetDir/v=$nextId")
+      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    // match the existing layers' seq/delete types so the recorded
+    // schema never sees an int/long or boolean/string conflict
+    val base = tableSchemaBase(spark, targetDir, nextId)
+    def typeOf(c: String, dflt: DataType) =
+      base.find(_.name == c).map(_.dataType).getOrElse(dflt)
     val withMeta = batch
-      .withColumn(layout.seqCol, lit(0L).cast(
-        typeOf(layout.seqCol, org.apache.spark.sql.types.LongType)))
+      .withColumn(layout.seqCol, lit(0L).cast(typeOf(layout.seqCol, LongType)))
       .withColumn(layout.deleteCol, lit(delete).cast(
         typeOf(layout.deleteCol, org.apache.spark.sql.types.BooleanType)))
+    // a type change against the committed history is refused before
+    // the layer lands
+    try evolveTableSchema(base, withMeta.schema, who) catch {
+      case e: IllegalArgumentException => release(); throw e
+    }
     val feed = changelog || fs.exists(
       new org.apache.hadoop.fs.Path(s"$targetDir/changelog"))
     if (feed)
@@ -1152,8 +1176,18 @@ object Streams extends org.apache.spark.internal.Logging {
         "this writer's — the write outlived inFlightClaimMs and a " +
         "racing writer reclaimed it; NOTHING was published (retry the " +
         "write, and size inFlightClaimMs above your slowest write)")
+    // the record is built now, not at the claim: a racer below this id
+    // may have committed since (its columns join the record), or may
+    // still be writing with its files not yet visible (then this
+    // version records nothing and its reads infer)
+    val schema =
+      if (uncommittedBelow(spark, targetDir, nextId)) None
+      else try Some(evolveTableSchema(tableSchemaBase(spark, targetDir,
+        nextId), withMeta.schema, who)) catch {
+        case e: IllegalArgumentException => release(); throw e
+      }
     commitIndexVersion(spark, targetDir, checkpoint = "", nextId,
-      retainVersions, withManifest = false)
+      retainVersions, withManifest = false, schema = schema)
     nextId
   }
 
@@ -3205,9 +3239,18 @@ object Streams extends org.apache.spark.internal.Logging {
   private def commitIndexVersion(spark: org.apache.spark.sql.SparkSession,
                                  targetDir: String, checkpoint: String,
                                  batchId: Long, retainVersions: Int,
-                                 withManifest: Boolean = true): Unit = {
+                                 withManifest: Boolean = true,
+                                 schema: Option[StructType] = None): Unit = {
     val fs = new org.apache.hadoop.fs.Path(targetDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a merge table's read schema, recorded before the version becomes
+    // visible: readers plan from it instead of inferring from footers
+    schema.foreach { s =>
+      val out = fs.create(new org.apache.hadoop.fs.Path(
+        s"$targetDir/v=$batchId/$TableSchemaFile"), true)
+      try out.write(s.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
     // withManifest = false for ±op (retraction) sinks: file-coverage is
     // meaningless under retractions (tail composition is unsound), so
     // recording one would only invite a wrong fresh registration — and
@@ -3323,8 +3366,7 @@ object Streams extends org.apache.spark.internal.Logging {
       if (batchIds.length < minBatches) None
       else {
         val basePath = s"$targetDir/$subdir"
-        def rd = if (evolving) spark.read.option("mergeSchema", "true")
-                 else spark.read
+        def rd = layerReader(spark, targetDir, subdir, version, evolving)
         val tail = rd.option("basePath", basePath)
           .parquet(batchIds.map(id => s"$basePath/batch=$id").toIndexedSeq: _*)
           .withColumn("batch", col("batch").cast("long"))
@@ -3609,19 +3651,19 @@ object Streams extends org.apache.spark.internal.Logging {
     * generation this is exactly the plain partitioned read the sinks
     * originally served — compaction is invisible to answers by
     * construction. */
-  /** `evolving = true` (the merge-on-read table's read mode) turns on
-    * parquet schema merging and missing-column-tolerant unions, so a
-    * target whose sink gained ADDED nullable columns over time reads
-    * deterministically — old layers surface the new columns as null.
-    * The index sinks keep the strict default: their schemas are fixed
-    * by construction, and a drifted layer should fail loudly. */
+  /** `evolving = true` (the merge-on-read table's and the partials'
+    * read mode) allows missing-column-tolerant unions, so a target
+    * whose sink gained ADDED nullable columns over time reads
+    * deterministically — old layers surface the new columns as null
+    * ([[layerReader]] picks the schema). The index sinks keep the
+    * strict default: their schemas are fixed by construction, and a
+    * drifted layer should fail loudly. */
   private def maintainedBatchRows(spark: org.apache.spark.sql.SparkSession,
                                   targetDir: String, subdir: String,
                                   version: Long,
                                   evolving: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
-    def rd = if (evolving) spark.read.option("mergeSchema", "true")
-             else spark.read
+    def rd = layerReader(spark, targetDir, subdir, version, evolving)
     val cOpt = committedCompactions(spark, targetDir, subdir)
       .filter(_ <= version).sorted.lastOption
     cOpt match {
@@ -3644,9 +3686,102 @@ object Streams extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** The reader of a maintained target's layers as of `version`. A
+    * merge table's version that recorded its read schema at commit
+    * plans from that record: `batch` joins it as a long, no parquet
+    * footer is opened, so building the read launches no Spark job.
+    * Versions committed before schemas were recorded, and the other
+    * evolving layouts, infer by merging every layer's footer schema
+    * (one Spark job per `parquet(…)` call); the rest read strictly. */
+  private def layerReader(spark: org.apache.spark.sql.SparkSession,
+                          targetDir: String, subdir: String, version: Long,
+                          evolving: Boolean)
+      : org.apache.spark.sql.DataFrameReader =
+    (if (subdir == "rows") recordedTableSchema(spark, targetDir, version)
+     else None) match {
+      case Some(s) => spark.read.schema(s.add("batch", LongType))
+      case None if evolving => spark.read.option("mergeSchema", "true")
+      case None => spark.read
+    }
+
+  /** The read schema merge-table version `version` recorded at commit
+    * (`v=<id>/_schema`), None when it recorded none. */
+  private def recordedTableSchema(spark: org.apache.spark.sql.SparkSession,
+                                  targetDir: String,
+                                  version: Long): Option[StructType] = {
+    val p = new org.apache.hadoop.fs.Path(s"$targetDir/v=$version/$TableSchemaFile")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = try Some(fs.open(p)) catch {
+      case _: java.io.FileNotFoundException => None
+    }
+    in.map { is =>
+      try DataType.fromJson(new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(is),
+        java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType]
+      finally is.close()
+    }
+  }
+
+  /** The read schema a merge-table version `id` builds on: the record
+    * of the newest committed version below `id`, inferred from that
+    * version's layers instead (once, then recorded from there on) when
+    * it recorded none — a table committed before schemas were
+    * recorded. Empty before the first version. */
+  private def tableSchemaBase(spark: org.apache.spark.sql.SparkSession,
+                              targetDir: String, id: Long): StructType =
+    snapshotVersions(spark, targetDir).filter(_ < id).maxOption match {
+      case Some(p) => recordedTableSchema(spark, targetDir, p).getOrElse(
+        StructType(maintainedBatchRows(spark, targetDir, "rows", p,
+          evolving = true).schema.filterNot(_.name == "batch")))
+      case None => new StructType()
+    }
+
+  /** Whether a write below `id` is still uncommitted: a claimed version
+    * or a layer between the newest committed version and `id`. Its
+    * files may not be visible yet (a write lands under the committer's
+    * `_temporary` first), so no record built now can carry its
+    * columns — `id` then records none and its reads infer. */
+  private def uncommittedBelow(spark: org.apache.spark.sql.SparkSession,
+                               targetDir: String, id: Long): Boolean = {
+    val prev = snapshotVersions(spark, targetDir).filter(_ < id).maxOption
+      .getOrElse(-1L)
+    val root = new org.apache.hadoop.fs.Path(targetDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val versionDirs = fs.listStatus(root).map(_.getPath.getName)
+      .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
+    (versionDirs ++ listBatchDirs(spark, targetDir, "rows"))
+      .exists(b => b > prev && b < id)
+  }
+
+  /** `base` plus the columns `layer` adds, appended in its order — the
+    * read schema a merge-table commit records, merged as parquet schema
+    * merging merges footers, nullable throughout as every parquet read
+    * is. A column whose type changes is refused: the layers could no
+    * longer be read under one schema. */
+  private def evolveTableSchema(base: StructType, layer: StructType,
+                                who: String): StructType = {
+    import org.apache.spark.sql.graftshim.Shim
+    val fields = Shim.asNullable(layer)
+    try Shim.mergeSchemas(base, fields) catch {
+      case e: org.apache.spark.SparkException =>
+        val clash = fields.iterator.flatMap(f =>
+          base.find(_.name == f.name).map(_ -> f)).find { case (b, f) =>
+          scala.util.Try(Shim.mergeSchemas(StructType(Seq(b)),
+            StructType(Seq(f)))).isFailure
+        }
+        clash.fold(throw e) { case (b, f) =>
+          throw new IllegalArgumentException(s"$who: column '${f.name}' " +
+            s"changes type from ${b.dataType.simpleString} to " +
+            s"${f.dataType.simpleString} — schema evolution may only ADD " +
+            "nullable columns or struct fields; nothing was published", e)
+        }
+    }
+  }
+
   /** Underscore-prefixed so parquet readers of the version directory
     * skip it as metadata. */
   private val ManifestFile = "_files"
+  private val TableSchemaFile = "_schema"
   private val FreshnessFile = "_freshness"
   private val LayoutFile = "_layout"
 
@@ -4282,13 +4417,21 @@ object Streams extends org.apache.spark.internal.Logging {
 
   // ---- Late-data accounting (Flink side-output equivalent) --------------
 
-  /** Exact count of rows this query's watermarked stateful operators
-    * have dropped as late, summed over completed triggers (Spark's
+  /** Rows this query's watermarked stateful operators have dropped as
+    * late, summed over the triggers still in `recentProgress` (Spark's
     * per-operator `numRowsDroppedByWatermark` — no extra pass over the
-    * data). Closes half of the documented side-output divergence
-    * (SURVEY §7.4 item 2): Spark drops late rows silently; this makes
-    * the drop count first-class. Progress retention bounds the window
-    * (default last 100 triggers) — poll per trigger for lifetime totals. */
+    * data). Two limits, both Spark's:
+    *  - it counts late (window, key) GROUPS, not late events: the drop
+    *    happens at the stateful operator's input, after the trigger's
+    *    partial aggregation, so two late events of one key and one
+    *    closed window count as 1;
+    *  - `recentProgress` keeps only the last
+    *    `spark.sql.streaming.numRecentProgressUpdates` (100) reports,
+    *    idle ones included, so on a longer stream the sum undercounts —
+    *    poll per trigger (or listen) for a lifetime total.
+    * [[captureLateRows]] hands over the late events themselves. Closes
+    * half of the documented side-output divergence (SURVEY §7.4 item
+    * 2): Spark drops late rows silently; this makes the drop visible. */
   def lateRowsDropped(q: StreamingQuery): Long =
     q.recentProgress.iterator
       .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark))

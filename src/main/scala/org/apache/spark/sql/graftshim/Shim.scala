@@ -38,6 +38,16 @@ object Shim {
   def pageSizeBytes: Long =
     org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes
 
+  /** `a` widened by the fields `b` adds, the way parquet schema merging
+    * combines footers (`StructType.merge`, the session's case
+    * sensitivity); throws a SparkException when a type conflicts. */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+                   b: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    a.merge(b, org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis)
+
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   def schemaOf(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(attrs)
 

@@ -837,6 +837,26 @@ abstract class StreamingSpecBase(rocksdb: Boolean) extends AnyFunSuite
     } finally { q.stop(); cap.stop() }
   }
 
+  test("W4d lateRowsDropped counts late (window, key) groups, not late events") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val in = MemoryStream[(Timestamp, String)]
+    val agg = Streams.tumblingAgg(
+      in.toDF().toDF("ts", "k"), "ts", "10 minutes", "10 minutes",
+      Seq("k"), Seq(count(lit(1)).as("n")))
+    val q = agg.writeStream.format("memory").queryName(qn("late_groups"))
+      .outputMode(OutputMode.Append()).start()
+    try {
+      in.addData((ts(1), "x")); q.processAllAvailable()
+      in.addData((ts(31), "x")); q.processAllAvailable() // watermark -> 00:21
+      // two late events of one key in one closed window, one batch
+      in.addData((ts(2), "x"), (ts(3), "x"), (ts(32), "x"))
+      q.processAllAvailable()
+      assert(Streams.lateRowsDropped(q) == 1L,
+        s"drop counter: ${Streams.lateRowsDropped(q)}")
+    } finally q.stop()
+  }
+
   test("W4c captureLateRows recovers its watermark across restart (no re-classification)") {
     val srcDir = tmp("late-src")
     val ckpt = tmp("late-restart-ckpt")
