@@ -55,6 +55,7 @@ object Engine {
       .config("spark.sql.parquet.filterPushdown", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.streaming.Streams.trackLateRows(spark)
     spark
   }
 
@@ -99,10 +100,12 @@ object Engine {
   }
 
   /** Ensure an externally-created session can read the nanos-timestamp
-    * `events` parquet; safe to call repeatedly. */
+    * `events` parquet and counts late rows over a query's lifetime
+    * (`Streams.lateRowsDropped`); safe to call repeatedly. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    graft.streaming.Streams.trackLateRows(spark)
     spark
   }
 }

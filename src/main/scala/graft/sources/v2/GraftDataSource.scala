@@ -44,7 +44,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * KEY-column-only predicates are routed through the commuting
   * point-read shapes ([[graft.streaming.Streams.latestTableWhere]] /
   * `latestSnapshotWhere` — filter whole key groups BEFORE resolution,
-  * pruning the key-range-clustered generation at row-group level),
+  * reading only the merge table's key buckets the predicate selects,
+  * or the partials' key-range-clustered generation's row groups),
   * and column pruning projects the resolved frame. Every pushed
   * filter is also re-applied above the scan (returned as post-scan),
   * so acceptance is never a correctness bet.

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
@@ -743,6 +744,17 @@ object Streams extends org.apache.spark.internal.Logging {
     * the same non-contract mergeUpsert has; give changes a total
     * per-key order.
     *
+    * BUCKETED LAYERS: every layer — a batch's slice, a generation, a
+    * [[tableDelete]] rewrite — is hashed on the key into `compactFiles`
+    * buckets (the count is recorded in `_merge` once, when the table is
+    * created) with each row's origin `batch` as a data column, so a
+    * read at any version is ONE bucketed scan over the generation and
+    * its tail: latest-wins resolution plans no exchange (one Spark job
+    * to collect a read, one to compact), and on a table keyed by one
+    * column a key IN-list reads only the buckets its keys hash to.
+    * `filesPerBatch` sizes the changelog
+    * layers only; a table layer holds at most one file per bucket.
+    *
     * SCHEMA EVOLUTION: adding nullable columns is supported — layers
     * keep the schema they were written with, and each version records
     * its read schema at commit (`v=<id>/_schema`: the predecessor's
@@ -761,10 +773,11 @@ object Streams extends org.apache.spark.internal.Logging {
     *
     * `changelogKeyPushdown`: when a batch touches at most this many
     * distinct keys, the changelog's pre-image read builds an IN-list
-    * predicate from them so the layer scan prunes at the parquet
-    * row-group level (the compacted generation is key-range-clustered)
-    * — per-trigger read I/O tracks |touched keys|, not |table|. Above
-    * the bound (or at 0) it falls back to the un-pruned key semi-join,
+    * predicate from them so the layer scan reads only the buckets
+    * those keys hash to (single-column keys) and prunes parquet row
+    * groups within them (every layer file is sorted by key) —
+    * per-trigger read I/O tracks |touched keys|, not |table|. Above the
+    * bound (or at 0) it falls back to the un-pruned key semi-join,
     * which is exact but scans every resolved layer.
     *
     * `compactMaxTail`: caps the raw batch-dir TAIL the geometric
@@ -773,11 +786,11 @@ object Streams extends org.apache.spark.internal.Logging {
     * (O(N log B) lifetime rewrite bytes), but every read (the
     * changelog pre-image included) plans and opens one file per tail
     * dir, so per-trigger latency creeps linearly within an interval
-    * (MergeLifecycleProbe: med trigger 0.9s→1.6s as the tail grew
-    * 345→645 dirs). A cap bounds that read-side cost at the price of
-    * more frequent folds (lifetime rewrite bytes O(N·B/maxTail));
-    * 0 = uncapped, the pure geometric schedule; -1 (the default) =
-    * DERIVED: `8 × compactEvery` — the probe showed the uncapped creep
+    * (measured: med trigger 0.9s→1.6s as the tail grew 345→645 dirs).
+    * A cap bounds that read-side cost at the price of more frequent
+    * folds (lifetime rewrite bytes O(N·B/maxTail)); 0 = uncapped, the
+    * pure geometric schedule; -1 (the default) = DERIVED:
+    * `8 × compactEvery` — the measurement showed the uncapped creep
     * costs 2× per-trigger time and point reads at 10³ batches, so
     * bounded-by-default is the right long-run posture and 8 intervals
     * keeps fold frequency within a constant factor of pure geometric.
@@ -807,7 +820,7 @@ object Streams extends org.apache.spark.internal.Logging {
       logWarning(s"Streams.mergeSink: plan has $streamingLeaves streaming " +
         "sources — no _files manifest will be written, so freshnessLagOf " +
         "cannot count pending files for this target")
-    val layout = MergeLayout(keyCols, seqCol, deleteCol)
+    val layout = MergeLayout(keyCols, seqCol, deleteCol, Some(compactFiles))
     if (changelog)
       require(!changes.columns.contains("op"),
         "Streams.mergeSink: the changelog emits an 'op' column — rename " +
@@ -815,39 +828,40 @@ object Streams extends org.apache.spark.internal.Logging {
     toVersionedSink(changes, checkpoint, targetDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       unresolveReplayedVersion(spark, targetDir, batchId)
-      writeMergeLayout(spark, targetDir, layout)
+      val table = writeMergeLayout(spark, targetDir, layout)
       // the batch's own latest-per-key slice, nothing else read or
       // rewritten (a replayed batch overwrites only its own
-      // subdirectory — the slice is a pure function of the batch)
+      // subdirectory — the slice is a pure function of the batch); the
+      // one shuffle hashes it into the table's buckets, so the window
+      // and the bucketed layer write need no other
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-      val reduced = batch.withColumn("__rk", row_number().over(w))
+      val reduced = clusterByKey(batch, table)
+        .withColumn("__rk", row_number().over(w))
         .filter(col("__rk") === 1).drop("__rk")
       // a type change is refused here, before anything lands; the sink
       // owns its table's ids (external writes refuse a `_query` target),
       // so no write below this batch can still be in flight
-      val base = tableSchemaBase(spark, targetDir, batchId)
+      val base = tableSchemaBase(spark, targetDir, table, batchId)
       val evolved = evolveTableSchema(base, reduced.schema, "Streams.mergeSink")
       // the write counts its own rows: an emptiness probe would be a
       // second Spark action scanning the change batch again
       val layerDir = new org.apache.hadoop.fs.Path(s"$targetDir/rows/batch=$batchId")
-      val landed = org.apache.spark.sql.Observation()
-      reduced.observe(landed, count(lit(1)).as("rows"))
-        .coalesce(filesPerBatch).write.mode("overwrite").parquet(layerDir.toString)
-      val hasRows = landed.get("rows") != 0L
+      val layer = reduced.withColumn("batch", lit(batchId))
+      val hasRows = writeMergeLayer(layer, layerDir.toString, table) != 0L
       if (!hasRows)
         layerDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .delete(layerDir, true)
       else if (changelog)
-        deriveChangelog(spark, targetDir, layout, reduced, batchId,
+        deriveChangelog(spark, targetDir, table, batchId, layer.schema,
           changelogKeyPushdown, filesPerBatch, "Streams.mergeSink")
       if (listBatchDirs(spark, targetDir, "rows").nonEmpty ||
           committedCompactions(spark, targetDir, "rows").nonEmpty)
         commitIndexVersion(spark, targetDir, checkpoint, batchId, retainVersions,
           schema = Some(if (hasRows) evolved else base))
       maybeAutoCompact(spark, targetDir, "rows", keyCols, compactFiles,
-        compactEvery, batchId, mergeResolveFor(layout), evolving = true,
-        maxTail = maxTail)
+        compactEvery, batchId, mergeResolveFor(table), evolving = true,
+        maxTail = maxTail, table = Some(table))
     }
   }
 
@@ -865,13 +879,20 @@ object Streams extends org.apache.spark.internal.Logging {
     * aggSnapshotSink-style MV follow a MUTABLE base. */
   private def deriveChangelog(spark: org.apache.spark.sql.SparkSession,
                               targetDir: String, layout: MergeLayout,
-                              reduced: DataFrame, batchId: Long,
+                              batchId: Long, layerSchema: StructType,
                               changelogKeyPushdown: Int,
                               filesPerBatch: Int, caller: String): Unit = {
     import org.apache.spark.sql.functions.col
     val keyCols = layout.keys
     val seqCol = layout.seqCol
     val deleteCol = layout.deleteCol
+    // the batch's slice read back from the layer it just wrote — the
+    // change batch itself is never scanned a second time
+    val layerDir = s"$targetDir/rows/batch=$batchId"
+    val reduced = bucketedLayers(spark, layout, Seq(layerDir), layerSchema)
+      .getOrElse(throw new IllegalStateException(
+        s"$caller: layer $layerDir was not written in buckets"))
+      .drop("batch")
     val targetCols = reduced.columns
       .filterNot(c => c == seqCol || c == deleteCol).toIndexedSeq
     val hasPrev = listBatchDirs(spark, targetDir, "rows")
@@ -884,8 +905,7 @@ object Streams extends org.apache.spark.internal.Logging {
     val out =
       if (!hasPrev) plus
       else {
-        val preBatch = maintainedBatchRows(spark, targetDir, "rows",
-          batchId - 1, evolving = true)
+        val preBatch = mergeTableRows(spark, targetDir, layout, batchId - 1)
         // dropped-column guard: the retraction side reads the
         // history's merged schema; if the batch dropped a data
         // column, -1 rows would carry its real old values while
@@ -1026,7 +1046,7 @@ object Streams extends org.apache.spark.internal.Logging {
             !rows.columns.contains("__del"),
           s"$who: '__seq'/'__del' are the created table's layout " +
             "columns — rename those data columns")
-        MergeLayout(createKeys, "__seq", "__del")
+        MergeLayout(createKeys, "__seq", "__del", Some(DefaultBuckets))
     }
     layout.keys.foreach(k => require(rows.columns.contains(k),
       s"$who: the write is missing key column '$k'"))
@@ -1047,7 +1067,8 @@ object Streams extends org.apache.spark.internal.Logging {
         batch.select(layout.keys.map(col): _*).distinct().count(),
       s"$who: duplicate keys within one write — one external write is " +
         "one version; split conflicting rows into separate writes")
-    writeMergeLayout(spark, targetDir, layout)
+    val table = writeMergeLayout(spark, targetDir,
+      layout.copy(buckets = layout.buckets.orElse(Some(DefaultBuckets))))
     // ---- exclusive version claim -----------------------------------
     // Two RACING external writers (the exact pattern format("graft")
     // write support invites — SQL INSERT INTO from any session) must
@@ -1133,7 +1154,7 @@ object Streams extends org.apache.spark.internal.Logging {
       .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
     // match the existing layers' seq/delete types so the recorded
     // schema never sees an int/long or boolean/string conflict
-    val base = tableSchemaBase(spark, targetDir, nextId)
+    val base = tableSchemaBase(spark, targetDir, table, nextId)
     def typeOf(c: String, dflt: DataType) =
       base.find(_.name == c).map(_.dataType).getOrElse(dflt)
     val withMeta = batch
@@ -1151,10 +1172,10 @@ object Streams extends org.apache.spark.internal.Logging {
       require(!batch.columns.contains("op"),
         s"$who: the changelog emits an 'op' column — rename the write's " +
           "own 'op' column")
-    withMeta.coalesce(filesPerBatch)
-      .write.mode("overwrite").parquet(s"$targetDir/rows/batch=$nextId")
+    val layer = withMeta.withColumn("batch", lit(nextId))
+    writeMergeLayer(layer, s"$targetDir/rows/batch=$nextId", table)
     if (feed)
-      deriveChangelog(spark, targetDir, layout, withMeta, nextId,
+      deriveChangelog(spark, targetDir, table, nextId, layer.schema,
         changelogKeyPushdown, filesPerBatch, who)
     mergeInsertInterleave.foreach(f => f(targetDir))
     // OWNERSHIP re-check before publishing: a writer that outlived
@@ -1183,7 +1204,7 @@ object Streams extends org.apache.spark.internal.Logging {
     val schema =
       if (uncommittedBelow(spark, targetDir, nextId)) None
       else try Some(evolveTableSchema(tableSchemaBase(spark, targetDir,
-        nextId), withMeta.schema, who)) catch {
+        table, nextId), withMeta.schema, who)) catch {
         case e: IllegalArgumentException => release(); throw e
       }
     commitIndexVersion(spark, targetDir, checkpoint = "", nextId,
@@ -1430,8 +1451,7 @@ object Streams extends org.apache.spark.internal.Logging {
       case None => snapshotVersions(spark, targetDir).sorted.lastOption
     }
     vOpt.map { v =>
-      mergeResolveFor(layout)(
-        maintainedBatchRows(spark, targetDir, "rows", v, evolving = true))
+      mergeResolveFor(layout)(mergeTableRows(spark, targetDir, layout, v))
         .drop("batch", layout.seqCol, layout.deleteCol)
     }
   }
@@ -1442,10 +1462,13 @@ object Streams extends org.apache.spark.internal.Logging {
     * first commutes with it ((σ_key ∘ resolve) = (resolve ∘ σ_key)),
     * while a non-key predicate would NOT (it could drop a key's
     * winning row and resurrect an older version — refused loudly).
-    * This is the 100 TB point-lookup shape: the predicate reaches the
-    * layer scans as a pushed parquet filter, the compacted generation
-    * is key-range-clustered so its row groups/footers prune, and the
-    * latest-wins window then runs over the handful of surviving rows
+    * This is the 100 TB point-lookup shape: on a table keyed by one
+    * column, an equality or IN-list on the key reads only the buckets
+    * its values hash to (every layer is hashed into the table's
+    * buckets, [[mergeSink]]), the
+    * predicate reaches those files as a pushed parquet filter (each is
+    * sorted by key, so row groups prune), and the latest-wins window
+    * then runs over the handful of surviving rows, with no exchange,
     * instead of the whole table. */
   def latestTableWhere(spark: org.apache.spark.sql.SparkSession,
                        targetDir: String,
@@ -1461,8 +1484,7 @@ object Streams extends org.apache.spark.internal.Logging {
       case None => snapshotVersions(spark, targetDir).sorted.lastOption
     }
     vOpt.map { v =>
-      val filtered = maintainedBatchRows(spark, targetDir, "rows", v,
-        evolving = true).where(pred)
+      val filtered = mergeTableRows(spark, targetDir, layout, v).where(pred)
       requireKeyOnlyPredicate(filtered, layout.keys,
         "Streams.latestTableWhere", "latest-wins resolution",
         "latestTable")
@@ -1529,9 +1551,15 @@ object Streams extends org.apache.spark.internal.Logging {
     * the RESOLVED state of the covered layers — latest-wins applied,
     * tombstones dropped (safe exactly because a generation folds
     * everything `<= version`: no older layer survives for a dropped
-    * tombstone to un-mask) — key-range-clustered so key lookups and
-    * range reads prune generation files. Configuration comes from the
-    * target's own `_merge` marker. */
+    * tombstone to un-mask) — hashed into the table's key buckets like
+    * every layer, each bucket file sorted by key, so a lookup on a
+    * one-column key reads only its keys' buckets. The compaction is ONE Spark job: the
+    * generation and its tail are read as one bucketed scan, resolved
+    * and written bucket by bucket with no exchange. `targetFiles` is
+    * the bucket count only for a table that records none yet (one
+    * written before bucketing, which this compaction buckets);
+    * otherwise the table's recorded count wins. Configuration comes
+    * from the target's own `_merge` marker. */
   def compactTable(spark: org.apache.spark.sql.SparkSession,
                    targetDir: String, targetFiles: Int = 4,
                    minBatches: Int = 2,
@@ -1542,7 +1570,7 @@ object Streams extends org.apache.spark.internal.Logging {
           "merge-on-read table target"))
     compactCore(spark, targetDir, "rows", layout.keys, targetFiles,
       minBatches, retainCompactions, mergeResolveFor(layout),
-      evolving = true)
+      evolving = true, table = Some(layout))
   }
 
   /** Targeted deletion from a [[mergeSink]] target — right-to-be-
@@ -1572,7 +1600,15 @@ object Streams extends org.apache.spark.internal.Logging {
     require(values.length <= maxValues,
       s"Streams.tableDelete: ${values.length} values exceeds $maxValues — " +
         "a deletion set that large is a rewrite, not a maintenance op")
-    scrubLayers(spark, targetDir, "rows", keyCol, values) +
+    // a bucketed layer is rewritten in the same buckets: a key's rows
+    // keep their bucket, so the layer still reads as a bucketed scan
+    val fs = new org.apache.hadoop.fs.Path(targetDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    scrubLayers(spark, targetDir, "rows", keyCol, values, write = (df, dir, ref) =>
+      if (layout.buckets.nonEmpty &&
+          inBuckets(layerFiles(fs, new org.apache.hadoop.fs.Path(ref.dir))))
+        writeMergeLayer(df, dir, layout)
+      else plainLayerWrite(df, dir, ref)) +
       scrubLayers(spark, targetDir, "changelog", keyCol, values)
   }
 
@@ -1699,10 +1735,9 @@ object Streams extends org.apache.spark.internal.Logging {
       val spark = batch.sparkSession
       unresolveReplayedVersion(spark, targetDir, batchId)
       writeAggLayout(spark, targetDir, layout)
-      if (!batch.isEmpty)
-        graft.ops.Cdc.aggSnapshotDelta(batch, keyCols, opCol, measures, scale)
-          .coalesce(filesPerBatch)
-          .write.mode("overwrite").parquet(s"$targetDir/delta/batch=$batchId")
+      writeBatchPartial(spark, batch, s"$targetDir/delta/batch=$batchId")(b =>
+        graft.ops.Cdc.aggSnapshotDelta(b, keyCols, opCol, measures, scale)
+          .coalesce(filesPerBatch))
       // an empty FIRST batch commits nothing (there is no snapshot
       // yet); after that even empty batches commit so the _freshness
       // record keeps advancing. No _files manifest: file-coverage is
@@ -1715,6 +1750,24 @@ object Streams extends org.apache.spark.internal.Logging {
       maybeAutoCompact(spark, targetDir, "delta", keyCols, compactFiles,
         compactEvery, batchId, mergePartialsFor(layout, keepBatch = true),
         evolving = true, maxTail = maxTail)
+    }
+  }
+
+  /** Writes an agg-snapshot sink's per-batch partial, `partial` of the
+    * change batch, to `dir`, and removes the directory again when the
+    * batch held no rows. The write counts the batch's rows itself: an
+    * emptiness probe would be a second Spark action scanning the change
+    * batch again. */
+  private def writeBatchPartial(spark: org.apache.spark.sql.SparkSession,
+                                batch: DataFrame, dir: String)(
+      partial: DataFrame => DataFrame): Unit = {
+    val landed = org.apache.spark.sql.Observation()
+    partial(batch.observe(landed, count(lit(1)).as("rows")))
+      .write.mode("overwrite").parquet(dir)
+    // no metrics at all when no task ran: an empty batch, too
+    if (landed.get.getOrElse("rows", 0L) == 0L) {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -1783,11 +1836,10 @@ object Streams extends org.apache.spark.internal.Logging {
       // the batch's own partial, nothing else read or rewritten: a
       // replayed batch overwrites only its own subdirectory (the
       // partial is a pure function of the batch — idempotent)
-      if (!batch.isEmpty)
-        graft.ops.Cdc.aggSnapshotMinMax(batch, keyCols, measures, scale,
+      writeBatchPartial(spark, batch, s"$targetDir/delta/batch=$batchId")(b =>
+        graft.ops.Cdc.aggSnapshotMinMax(b, keyCols, measures, scale,
             distinctCols, kmvK, hllCols, hllLgK, distinctTuples, kllCols, kllK)
-          .coalesce(filesPerBatch)
-          .write.mode("overwrite").parquet(s"$targetDir/delta/batch=$batchId")
+          .coalesce(filesPerBatch))
       // commitIndexVersion writes the cumulative _files manifest (what
       // MvRewrite.registerVersionedFresh's exactly-current tail
       // composition subtracts from; a missing file log writes none and
@@ -2958,9 +3010,11 @@ object Streams extends org.apache.spark.internal.Logging {
     * survive (a null never matches a deletion value). */
   private def scrubLayers(spark: org.apache.spark.sql.SparkSession,
                           targetDir: String, subdir: String,
-                          colName: String, values: Seq[Any]): Int = {
+                          colName: String, values: Seq[Any],
+                          write: (DataFrame, String, LayerRef) => Unit =
+                            plainLayerWrite): Int = {
     import org.apache.spark.sql.functions.col
-    rewriteLayers(spark, targetDir, subdir) { ref =>
+    rewriteLayers(spark, targetDir, subdir, write = write) { ref =>
       val layer = spark.read.parquet(ref.dir)
       if (layer.filter(col(colName).isin(values: _*)).isEmpty) None
       else Some(layer.filter(col(colName).isNull ||
@@ -2973,6 +3027,9 @@ object Streams extends org.apache.spark.internal.Logging {
     * generation. */
   private final case class LayerRef(dir: String, name: String,
                                     isGeneration: Boolean, id: Long)
+
+  private def plainLayerWrite(df: DataFrame, dir: String, ref: LayerRef): Unit =
+    df.write.mode("overwrite").parquet(dir)
 
   /** The staged-swap rewrite engine behind [[scrubLayers]] and the
     * BM25 df adjustment: visit every on-disk LAYER of `subdir` (raw
@@ -2996,7 +3053,9 @@ object Streams extends org.apache.spark.internal.Logging {
     * return None. */
   private def rewriteLayers(spark: org.apache.spark.sql.SparkSession,
                             targetDir: String, subdir: String,
-                            stamp: Option[String] = None)(
+                            stamp: Option[String] = None,
+                            write: (DataFrame, String, LayerRef) => Unit =
+                              plainLayerWrite)(
       transform: LayerRef => Option[DataFrame]): Int = {
     val fs = new org.apache.hadoop.fs.Path(targetDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3030,7 +3089,7 @@ object Streams extends org.apache.spark.internal.Logging {
     layers.foreach { ref =>
       transform(ref).foreach { replacement =>
         val tmp = s"$stagingDir/${ref.name}"
-        replacement.write.mode("overwrite").parquet(tmp)
+        write(replacement, tmp, ref)
         stamp.foreach(s =>
           fs.create(new org.apache.hadoop.fs.Path(s"$tmp/$s"), true).close())
         val aside = new org.apache.hadoop.fs.Path(s"$stagingDir/${ref.name}.old")
@@ -3350,7 +3409,8 @@ object Streams extends org.apache.spark.internal.Logging {
                           clusterCols: Seq[String], targetFiles: Int,
                           minBatches: Int, retainCompactions: Int,
                           transform: DataFrame => DataFrame,
-                          evolving: Boolean = false): Option[Long] = {
+                          evolving: Boolean = false,
+                          table: Option[MergeLayout] = None): Option[Long] = {
     import org.apache.spark.sql.functions.col
     require(targetFiles > 0, "Streams.compactIndex: targetFiles must be positive")
     require(minBatches >= 1, "Streams.compactIndex: minBatches must be >= 1")
@@ -3365,24 +3425,37 @@ object Streams extends org.apache.spark.internal.Logging {
         .filter(id => id <= version && prevC.forall(id > _)).sorted
       if (batchIds.length < minBatches) None
       else {
-        val basePath = s"$targetDir/$subdir"
-        def rd = layerReader(spark, targetDir, subdir, version, evolving)
-        val tail = rd.option("basePath", basePath)
-          .parquet(batchIds.map(id => s"$basePath/batch=$id").toIndexedSeq: _*)
-          .withColumn("batch", col("batch").cast("long"))
-        val all = prevC match {
-          case Some(c) =>
-            rd.parquet(s"$targetDir/compact/$subdir/c=$c")
-              .unionByName(tail, allowMissingColumns = evolving)
-          case None => tail
-        }
         val out = s"$targetDir/compact/$subdir/c=$version"
-        val folded = transform(all)
-        val clustered =
-          if (clusterCols.isEmpty) folded.repartition(targetFiles)
-          else folded.repartitionByRange(targetFiles, clusterCols.map(col): _*)
-            .sortWithinPartitions(clusterCols.map(col): _*)
-        clustered.write.mode("overwrite").parquet(out)
+        table match {
+          case Some(t) =>
+            // a merge table's generation is hashed into the table's
+            // buckets like every layer (a table written before bucketing
+            // records its count now): read bucketed, the resolution and
+            // the write run in one stage with no exchange
+            val layout = writeMergeLayout(spark, targetDir,
+              t.copy(buckets = t.buckets.orElse(Some(targetFiles))))
+            writeMergeLayer(transform(clusterByKey(
+              mergeTableRows(spark, targetDir, layout, version), layout)),
+              out, layout)
+          case None =>
+            val basePath = s"$targetDir/$subdir"
+            def rd = layerReader(spark, targetDir, subdir, version, evolving)
+            val tail = rd.option("basePath", basePath)
+              .parquet(batchIds.map(id => s"$basePath/batch=$id").toIndexedSeq: _*)
+              .withColumn("batch", col("batch").cast("long"))
+            val all = prevC match {
+              case Some(c) =>
+                rd.parquet(s"$targetDir/compact/$subdir/c=$c")
+                  .unionByName(tail, allowMissingColumns = evolving)
+              case None => tail
+            }
+            val folded = transform(all)
+            val clustered =
+              if (clusterCols.isEmpty) folded.repartition(targetFiles)
+              else folded.repartitionByRange(targetFiles, clusterCols.map(col): _*)
+                .sortWithinPartitions(clusterCols.map(col): _*)
+            clustered.write.mode("overwrite").parquet(out)
+        }
         val fs = new org.apache.hadoop.fs.Path(targetDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         // explicit marker — idempotent with the parquet committer's
@@ -3458,7 +3531,8 @@ object Streams extends org.apache.spark.internal.Logging {
                                compactEvery: Int, batchId: Long,
                                transform: DataFrame => DataFrame = identity,
                                evolving: Boolean = false,
-                               maxTail: Int = 0)
+                               maxTail: Int = 0,
+                               table: Option[MergeLayout] = None)
       : Unit =
     if (compactEvery > 0) {
       val prevC = committedCompactions(spark, targetDir, subdir)
@@ -3476,7 +3550,7 @@ object Streams extends org.apache.spark.internal.Logging {
       }
       if (tail >= interval) {
         compactCore(spark, targetDir, subdir, clusterCols, compactFiles,
-          minBatches = 1, retainCompactions = 2, transform, evolving)
+          minBatches = 1, retainCompactions = 2, transform, evolving, table)
         // vacuum only once a SECOND generation exists: on the very first
         // compaction the just-committed generation IS the oldest one, so
         // vacuuming now would free every covered batch dir with zero
@@ -3686,6 +3760,80 @@ object Streams extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** A merge table's rows as of `version`, `batch` included: the
+    * freshest committed generation `c <= version` and the batch dirs in
+    * `(c, version]`, read as ONE relation hashed into the table's
+    * buckets — latest-wins resolution over it plans no exchange, and a
+    * key IN-list reads only the buckets its keys hash to. A table with a
+    * layer written before bucketing (its files carry no bucket id) reads
+    * through the per-layer union of [[maintainedBatchRows]] until its
+    * next compaction rewrites it, and so does a version that recorded no
+    * read schema. */
+  private def mergeTableRows(spark: org.apache.spark.sql.SparkSession,
+                             targetDir: String, layout: MergeLayout,
+                             version: Long): DataFrame = {
+    val gen = committedCompactions(spark, targetDir, "rows")
+      .filter(_ <= version).maxOption
+    val tail = listBatchDirs(spark, targetDir, "rows")
+      .filter(id => id <= version && gen.forall(id > _)).sorted
+    val dirs = gen.map(c => s"$targetDir/compact/rows/c=$c").toSeq ++
+      tail.map(id => s"$targetDir/rows/batch=$id")
+    recordedTableSchema(spark, targetDir, version)
+      .flatMap(s => bucketedLayers(spark, layout, dirs, s.add("batch", LongType)))
+      .getOrElse(maintainedBatchRows(spark, targetDir, "rows", version,
+        evolving = true))
+  }
+
+  /** Merge-table layer directories read as one bucketed relation under
+    * `schema` (`batch` last), or None when the table records no bucket
+    * count or a layer holds a file written without buckets. */
+  private def bucketedLayers(spark: org.apache.spark.sql.SparkSession,
+                             layout: MergeLayout, dirs: Seq[String],
+                             schema: StructType): Option[DataFrame] =
+    layout.buckets.flatMap { n =>
+      val fs = new org.apache.hadoop.fs.Path(dirs.headOption.getOrElse("/"))
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val listed = dirs.map { d =>
+        val p = fs.makeQualified(new org.apache.hadoop.fs.Path(d))
+        p -> layerFiles(fs, p)
+      }
+      if (!listed.forall(l => inBuckets(l._2))) None
+      else Some(Shim.bucketedParquet(spark, listed, Shim.asNullable(schema),
+        n, layout.keys))
+    }
+
+  /** A layer directory's data files (names starting `_` or `.` are
+    * metadata, as parquet reads them). */
+  private def layerFiles(fs: org.apache.hadoop.fs.FileSystem,
+                         dir: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(dir).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    } catch { case _: java.io.FileNotFoundException => Array.empty }
+
+  /** Whether every one of a layer's files carries a bucket id. */
+  private def inBuckets(files: Array[org.apache.hadoop.fs.FileStatus]): Boolean =
+    files.forall(f => org.apache.spark.sql.execution.datasources.BucketingUtils
+      .getBucketId(f.getPath.getName).isDefined)
+
+  /** `df` hashed into the merge table's buckets by key — the exchange a
+    * per-key operator and the bucketed layer write then share; Spark
+    * drops it when `df` already is (a bucketed read). */
+  private def clusterByKey(df: DataFrame, layout: MergeLayout): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.repartition(layout.buckets.get, layout.keys.map(col): _*)
+  }
+
+  /** Writes one merge-table layer — a batch's slice, a generation, or a
+    * rewrite of either — with its rows' origin `batch` as a data column,
+    * in the table's buckets: at most one file per bucket. Returns the
+    * rows written. */
+  private def writeMergeLayer(df: DataFrame, dir: String,
+                              layout: MergeLayout): Long =
+    Shim.writeBucketedParquet(clusterByKey(df, layout), dir,
+      layout.buckets.get, layout.keys)
+
   /** The reader of a maintained target's layers as of `version`. A
     * merge table's version that recorded its read schema at commit
     * plans from that record: `batch` joins it as a long, no parquet
@@ -3728,11 +3876,12 @@ object Streams extends org.apache.spark.internal.Logging {
     * it recorded none — a table committed before schemas were
     * recorded. Empty before the first version. */
   private def tableSchemaBase(spark: org.apache.spark.sql.SparkSession,
-                              targetDir: String, id: Long): StructType =
+                              targetDir: String, layout: MergeLayout,
+                              id: Long): StructType =
     snapshotVersions(spark, targetDir).filter(_ < id).maxOption match {
       case Some(p) => recordedTableSchema(spark, targetDir, p).getOrElse(
-        StructType(maintainedBatchRows(spark, targetDir, "rows", p,
-          evolving = true).schema.filterNot(_.name == "batch")))
+        StructType(mergeTableRows(spark, targetDir, layout, p)
+          .schema.filterNot(_.name == "batch")))
       case None => new StructType()
     }
 
@@ -3760,7 +3909,6 @@ object Streams extends org.apache.spark.internal.Logging {
     * longer be read under one schema. */
   private def evolveTableSchema(base: StructType, layer: StructType,
                                 who: String): StructType = {
-    import org.apache.spark.sql.graftshim.Shim
     val fields = Shim.asNullable(layer)
     try Shim.mergeSchemas(base, fields) catch {
       case e: org.apache.spark.SparkException =>
@@ -3801,39 +3949,65 @@ object Streams extends org.apache.spark.internal.Logging {
 
   /** The on-disk self-description of a [[mergeSink]] merge-on-read
     * table target: the key columns, the intra-batch ordering column,
-    * and the tombstone flag — everything [[latestTable]] /
+    * the tombstone flag and the layers' key-bucket count (None for a
+    * table written before layers were bucketed) — everything [[latestTable]] /
     * [[compactTable]] / [[maintainArtifact]] need to resolve layers
     * without being told the sink's configuration. Same plain-text
     * marker discipline as [[AggLayout]] (no commas in column names). */
   final case class MergeLayout(keys: Seq[String], seqCol: String,
-                               deleteCol: String)
+                               deleteCol: String,
+                               buckets: Option[Int] = None)
 
   private val MergeFile = "_merge"
 
+  /** The bucket count [[mergeTableInsert]] records for a table it
+    * creates, or first writes to after it was written without buckets. */
+  private val DefaultBuckets = 4
+
+  /** Checks `layout` against the target's `_merge` marker, creating it
+    * on first use, and returns the table's layout. `buckets` is
+    * recorded once, when the marker is created or — for a table written
+    * before bucketing — by the first write that brings one; a later
+    * writer's own count never changes it (every layer must hash alike). */
   private def writeMergeLayout(spark: org.apache.spark.sql.SparkSession,
-                               targetDir: String, layout: MergeLayout): Unit = {
+                               targetDir: String,
+                               layout: MergeLayout): MergeLayout = {
     val p = new org.apache.hadoop.fs.Path(s"$targetDir/$MergeFile")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def record(l: MergeLayout): MergeLayout = {
+      // written aside and renamed in: a reader never sees a torn marker
+      val tmp = new org.apache.hadoop.fs.Path(s"$targetDir/.$MergeFile.tmp")
+      val out = fs.create(tmp, true)
+      try out.write((s"layout=merge-rows\nkeys=${l.keys.mkString(",")}\n" +
+        s"seq=${l.seqCol}\ndelete=${l.deleteCol}\n" +
+        l.buckets.fold("")(n => s"buckets=$n\n"))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, p)) {
+        fs.delete(p, false)
+        require(fs.rename(tmp, p), s"merge sink: could not write $p")
+      }
+      l
+    }
     mergeLayoutOf(spark, targetDir) match {
       case Some(existing) =>
         // a sink restarted with DIFFERENT key/seq/delete configuration
         // would write rows the resolution then mis-orders or mis-drops
         // — fail at the first trigger, like the agg-partials marker
-        require(existing == layout,
+        require(existing.copy(buckets = None) == layout.copy(buckets = None),
           s"merge sink: $targetDir was built with $existing but this sink " +
             s"is configured as $layout — mixing layouts would corrupt " +
             "latest-wins resolution; use a fresh target (or the original " +
             "configuration)")
+        if (existing.buckets.isEmpty && layout.buckets.nonEmpty) record(
+          existing.copy(buckets = layout.buckets))
+        else existing
       case None =>
         (layout.keys :+ layout.seqCol :+ layout.deleteCol).foreach(k =>
           require(!k.contains(","),
             s"merge sink: column '$k' contains a comma — the _merge " +
               "marker cannot encode it"))
-        val out = fs.create(p, true)
-        try out.write((s"layout=merge-rows\nkeys=${layout.keys.mkString(",")}\n" +
-          s"seq=${layout.seqCol}\ndelete=${layout.deleteCol}\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        record(layout)
     }
   }
 
@@ -3857,7 +4031,7 @@ object Streams extends org.apache.spark.internal.Logging {
       if (!kv.get("layout").contains("merge-rows")) None
       else Some(MergeLayout(
         kv("keys").split(",").toIndexedSeq.filter(_.nonEmpty),
-        kv("seq"), kv("delete")))
+        kv("seq"), kv("delete"), kv.get("buckets").map(_.toInt)))
     }
   }
 
@@ -4380,7 +4554,7 @@ object Streams extends org.apache.spark.internal.Logging {
         // a mergeSink target's v= dirs hold only markers — resolve its
         // rows/ layers instead (same answer latestTable(asOf) serves)
         case Some(ml) => mergeResolveFor(ml)(
-          maintainedBatchRows(spark, targetDir, "rows", v, evolving = true))
+          mergeTableRows(spark, targetDir, ml, v))
           .drop("batch", ml.seqCol, ml.deleteCol)
         case None => spark.read.parquet(s"$targetDir/v=$v")
       }
@@ -4418,24 +4592,62 @@ object Streams extends org.apache.spark.internal.Logging {
   // ---- Late-data accounting (Flink side-output equivalent) --------------
 
   /** Rows this query's watermarked stateful operators have dropped as
-    * late, summed over the triggers still in `recentProgress` (Spark's
-    * per-operator `numRowsDroppedByWatermark` — no extra pass over the
-    * data). Two limits, both Spark's:
+    * late over its lifetime in this session, restarts from its
+    * checkpoint within the session included
+    * (Spark's per-operator `numRowsDroppedByWatermark` — no extra pass
+    * over the data), summed per query id by the listener
+    * [[trackLateRows]] registers on the session; [[graft.Engine.session]]
+    * and [[graft.Engine.tune]] register it. Reports the listener has not
+    * heard yet (it hears them asynchronously) are read from
+    * `recentProgress`. Two limits:
     *  - it counts late (window, key) GROUPS, not late events: the drop
     *    happens at the stateful operator's input, after the trigger's
     *    partial aggregation, so two late events of one key and one
     *    closed window count as 1;
-    *  - `recentProgress` keeps only the last
+    *  - on a session without the listener it sums `recentProgress`
+    *    alone, which keeps only the last
     *    `spark.sql.streaming.numRecentProgressUpdates` (100) reports,
-    *    idle ones included, so on a longer stream the sum undercounts —
-    *    poll per trigger (or listen) for a lifetime total.
+    *    idle ones included, so on a longer stream it undercounts.
     * [[captureLateRows]] hands over the late events themselves. Closes
     * half of the documented side-output divergence (SURVEY §7.4 item
     * 2): Spark drops late rows silently; this makes the drop visible. */
   def lateRowsDropped(q: StreamingQuery): Long =
-    q.recentProgress.iterator
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark))
-      .sum
+    q.sparkSession.streams.listListeners().collectFirst {
+      case l: LateRowsListener => l.total(q)
+    }.getOrElse(q.recentProgress.iterator.map(droppedLate).sum)
+
+  /** Registers the session's late-row listener behind [[lateRowsDropped]],
+    * once however often it is called. */
+  private[graft] def trackLateRows(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.streams.synchronized {
+      if (!spark.streams.listListeners().exists(_.isInstanceOf[LateRowsListener]))
+        spark.streams.addListener(new LateRowsListener)
+    }
+
+  private def droppedLate(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
+    p.stateOperators.iterator.map(_.numRowsDroppedByWatermark).sum
+
+  private final class LateRowsListener
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    /** Per query id: the rows dropped and the highest batch id heard. */
+    private val heard =
+      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, (Long, Long)]()
+
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val p = e.progress
+      heard.merge(p.id, (droppedLate(p), p.batchId),
+        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+    }
+
+    def total(q: StreamingQuery): Long = {
+      val (dropped, last) = Option(heard.get(q.id)).getOrElse((0L, -1L))
+      dropped + q.recentProgress.iterator.filter(_.batchId > last)
+        .map(droppedLate).sum
+    }
+  }
 
   /** The capture half of the side-output equivalent: a foreachBatch
     * query over the SAME source that replicates Spark's watermark

@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Maintained-INDEX lifecycle at 10³ batches — the BM25 twin of
-  * [[MergeLifecycleProbe]] (which measured the merge table): does a
+/** Maintained-INDEX lifecycle at 10³ batches — the BM25 twin of the
+  * merge-table lifecycle measurement (COVERAGE.md): does a
   * search's FILE-OPEN count stay bounded under `compactMaxTail`, and
   * does a targeted forget cost O(layers containing hits) rather than
   * O(all layers)?

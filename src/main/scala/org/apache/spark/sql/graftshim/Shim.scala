@@ -51,6 +51,65 @@ object Shim {
   def schemaOf(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(attrs)
 
+  /** Writes `df` as parquet under `dir` (replacing it) the way Spark
+    * writes a bucketed table, without a catalog table: every row goes to
+    * file bucket `pmod(murmur3(keys), buckets)` — the bucket id is in
+    * the file name — sorted by `keys` within its file. Returns the rows
+    * written. */
+  def writeBucketedParquet(df: DataFrame, dir: String, buckets: Int,
+                           keys: Seq[String]): Long = {
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val query = df.queryExecution.analyzed
+    val cmd = InsertIntoHadoopFsRelationCommand(
+      new org.apache.hadoop.fs.Path(dir), Map.empty,
+      ifPartitionNotExists = false, partitionColumns = Nil,
+      bucketSpec = Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
+        buckets, keys, keys)),
+      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      options = Map.empty, query = query,
+      mode = org.apache.spark.sql.SaveMode.Overwrite, catalogTable = None,
+      fileIndex = None, outputColumnNames = query.output.map(_.name))
+    // the command runs eagerly (adaptive execution wraps it); its
+    // write metrics count the rows
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    ofRows(df.sparkSession, cmd).queryExecution.commandExecuted.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.CommandResult =>
+        helper.collectFirst(r.commandPhysicalPlan) {
+          case w: org.apache.spark.sql.execution.command.DataWritingCommandExec =>
+            w.metrics("numOutputRows").value
+        }
+    }.flatten.getOrElse(throw new IllegalStateException(
+      s"bucketed write to $dir reported no row count"))
+  }
+
+  /** A parquet relation over already-listed layer directories — no
+    * listing, no partition discovery — whose files
+    * [[writeBucketedParquet]] wrote with the same `buckets` and `keys`:
+    * its scan reports hash partitioning on `keys`, so a per-key
+    * operator above it needs no exchange, and an equality or IN filter
+    * on a single key reads only the matching buckets. */
+  def bucketedParquet(spark: SparkSession,
+                      layers: Seq[(org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus])],
+                      schema: org.apache.spark.sql.types.StructType,
+                      buckets: Int, keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources._
+    val listed = layers.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: org.apache.hadoop.fs.Path) = listed.get(path)
+      override def putLeafFiles(path: org.apache.hadoop.fs.Path,
+                                files: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, layers.map(_._1), Map.empty,
+      Some(schema), cache, Some(PartitionSpec.emptySpec), None)
+    val relation = HadoopFsRelation(index,
+      new org.apache.spark.sql.types.StructType(), schema,
+      Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(buckets, keys, keys)),
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(spark)
+    spark.baseRelationToDataFrame(relation)
+  }
+
   /** A spill-capable row sorter with the prefix optimization disabled
     * (constant prefix → every comparison falls through to `ordering`). */
   def rowSorter(schema: org.apache.spark.sql.types.StructType,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.streaming.Streams
 
 /** The merge table's recorded read schema (`v=<id>/_schema`): reads
@@ -32,10 +31,11 @@ class MergeTableSchemaSpec extends AnyFunSuite {
 
   /** Runs the sink over every landed file, one batch per file. */
   private def runSink(in: String, tgt: String, ck: String,
-                      schema: String = changeSchema): StreamingQuery = {
+                      schema: String = changeSchema,
+                      changelog: Boolean = false): StreamingQuery = {
     val q = Streams.mergeSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(in), tgt, ck, Seq("k"), "seq", "del")
+        .parquet(in), tgt, ck, Seq("k"), "seq", "del", changelog = changelog)
     try q.processAllAvailable() finally q.stop()
     q
   }
@@ -50,26 +50,10 @@ class MergeTableSchemaSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$tgt/v=$v/_schema")), "UTF-8"))
       .asInstanceOf[StructType]
 
-  /** Spark jobs `body` launches from this thread, counted once the
-    * listener bus has delivered every event. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "counted")
-    try { body; org.apache.spark.ListenerBusDrain(sc); n.get() }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-  }
+  private def jobsDuring(body: => Unit): Int =
+    SparkCounts.during(spark)(body).jobs
 
-  test("building a merge-table read launches no Spark job, a 5-key lookup at most 2, before and after a compaction") {
+  test("building a merge-table read launches no Spark job, a collected 5-key lookup one, before and after a compaction") {
     val (in, tgt, ck) = (tmp("mts-in"), tmp("mts-t"), tmp("mts-ck"))
     land(in, (1L to 20L).map(k => (k, s"a$k", 1L, false)))
     land(in, Seq((2L, "b2", 2L, false), (3L, "x", 2L, true)))
@@ -88,7 +72,7 @@ class MergeTableSchemaSpec extends AnyFunSuite {
           .get.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       }
       assert(got.sorted == expected, s"lookup answered $got")
-      assert(jobs <= 2, s"a 5-key lookup launched $jobs jobs")
+      assert(jobs == 1, s"a 5-key lookup launched $jobs jobs")
       assert(Streams.latestTable(spark, tgt).get.count() == live)
     }
     check(Seq(1L -> "a1", 2L -> "b2", 4L -> "a4"), 19L)
@@ -243,25 +227,35 @@ class MergeTableSchemaSpec extends AnyFunSuite {
   }
 
   test("mergeSink reads each change batch once: numInputRows equals the rows landed; empty change files leave answers unchanged") {
-    val (in, tgt, ck) = (tmp("mts-em-in"), tmp("mts-em-t"), tmp("mts-em-ck"))
-    // an empty FIRST batch commits nothing
-    land(in, Nil)
-    runSink(in, tgt, ck)
-    assert(Streams.snapshotVersionsOf(spark, tgt).isEmpty)
-    assert(!fs.exists(path(s"$tgt/rows/batch=0")))
-    land(in, (1L to 50L).map(k => (k, s"a$k", 1L, false)))
-    val q = runSink(in, tgt, ck)
-    val data = q.recentProgress.filter(_.numInputRows > 0)
-    assert(data.map(_.numInputRows).toSeq == Seq(50L),
-      s"numInputRows: ${q.recentProgress.map(_.numInputRows).mkString(", ")}")
-    val before = rows(Streams.latestTable(spark, tgt).get)
-    assert(before.size == 50)
-    // an empty LATER batch commits a version but lands no layer
-    land(in, Nil)
-    runSink(in, tgt, ck)
-    assert(Streams.snapshotVersionsOf(spark, tgt) == Seq(1L, 2L))
-    assert(!fs.exists(path(s"$tgt/rows/batch=2")))
-    assert(recorded(tgt, 2L) == recorded(tgt, 1L))
-    assert(rows(Streams.latestTable(spark, tgt).get) == before)
+    Seq(false, true).foreach { changelog =>
+      val (in, tgt, ck) = (tmp("mts-em-in"), tmp("mts-em-t"), tmp("mts-em-ck"))
+      // an empty FIRST batch commits nothing
+      land(in, Nil)
+      runSink(in, tgt, ck, changelog = changelog)
+      assert(Streams.snapshotVersionsOf(spark, tgt).isEmpty)
+      assert(!fs.exists(path(s"$tgt/rows/batch=0")))
+      // with the change feed on, the second batch also derives its
+      // retractions against the first
+      land(in, (1L to 50L).map(k => (k, s"a$k", 1L, false)))
+      land(in, (26L to 75L).map(k => (k, s"b$k", 2L, false)))
+      val q = runSink(in, tgt, ck, changelog = changelog)
+      val data = q.recentProgress.filter(_.numInputRows > 0)
+      assert(data.map(_.numInputRows).toSeq == Seq(50L, 50L),
+        s"changelog = $changelog, numInputRows: " +
+          q.recentProgress.map(_.numInputRows).mkString(", "))
+      val before = rows(Streams.latestTable(spark, tgt).get)
+      assert(before.size == 75)
+      if (changelog)
+        assert(spark.read.parquet(s"$tgt/changelog/batch=2")
+          .groupBy("op").count().collect().map(r => r.getInt(0) -> r.getLong(1))
+          .toMap == Map(1 -> 50L, -1 -> 25L))
+      // an empty LATER batch commits a version but lands no layer
+      land(in, Nil)
+      runSink(in, tgt, ck, changelog = changelog)
+      assert(Streams.snapshotVersionsOf(spark, tgt) == Seq(1L, 2L, 3L))
+      assert(!fs.exists(path(s"$tgt/rows/batch=3")))
+      assert(recorded(tgt, 3L) == recorded(tgt, 2L))
+      assert(rows(Streams.latestTable(spark, tgt).get) == before)
+    }
   }
 }
