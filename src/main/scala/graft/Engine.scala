@@ -16,6 +16,13 @@ import org.apache.spark.sql.SparkSession
   *    cluster this is overridden by AQE's coalescing from a high initial.
   *  - parquet nanosAsLong: the `events` table carries TIMESTAMP(NANOS),
   *    which Spark's vectorized reader otherwise rejects.
+  *  - the `file` scheme resolves to [[graft.io.LocalFileSystem]] and
+  *    [[graft.io.LocalFs]] (Hadoop's `fs.file.impl` and
+  *    `fs.AbstractFileSystem.file.impl`): without libhadoop, Hadoop's own
+  *    local file system forks `chmod` for every file or directory it
+  *    creates and `readlink` for every checkpoint-log or state-store
+  *    rename, which made up most of a small micro-batch's log writes and
+  *    state commit. Same files, modes and commit order, set in-process.
   */
 object Engine {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -53,6 +60,7 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.filterPushdown", "true")
+      .config(graft.io.LocalFs.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.streaming.Streams.trackLateRows(spark)
@@ -101,7 +109,12 @@ object Engine {
 
   /** Ensure an externally-created session can read the nanos-timestamp
     * `events` parquet and counts late rows over a query's lifetime
-    * (`Streams.lateRowsDropped`); safe to call repeatedly. */
+    * (`Streams.lateRowsDropped`); safe to call repeatedly. Such a session
+    * keeps Hadoop's stock local file system (and its `chmod`/`readlink`
+    * forks) unless it was built with the two keys of
+    * [[graft.io.LocalFs.sparkConf]]: setting them here would not reach a
+    * `FileSystem` already cached, since that cache is JVM-wide and its key
+    * ignores the implementation class. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
